@@ -243,23 +243,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val coldRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD_RUNS", "2").toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-only A/B knob for local conf experiments ("k=v;k2=v2");
-    // the driver leaves it unset and gets exactly the config above
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setupSession(spark)
+    val spark = GraftSession.local()
     // absorb session/executor startup so the first query's time is real
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.format("noop").mode("overwrite").save()
@@ -370,11 +356,8 @@ object Bench {
       }
     }
 
-    // optional comma-separated subset for local iteration; the driver
-    // leaves it unset and benches everything
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(q => s(q._1)))
+    // the driver leaves SPARK_GRAFT_ONLY unset and benches everything
+    val selected = graft.queries.QueryRegistry.selected.map(q => q.name -> q.build)
 
     // Seeded per-sweep order randomization: queries share one JVM and
     // one session, so a FIXED order lets a neighbor effect (a GC debt,
@@ -389,7 +372,7 @@ object Bench {
     val orderSeed = sys.env.get("SPARK_GRAFT_BENCH_ORDER_SEED")
       .map(_.toLong).getOrElse(System.nanoTime())
     val orderedSelected =
-      new scala.util.Random(orderSeed).shuffle(selected.toSeq.sortBy(_._1))
+      new scala.util.Random(orderSeed).shuffle(selected.sortBy(_._1))
 
     // CHANGED-ONLY mode (local iteration; the driver leaves it unset and
     // the full five-sample sweep stays the recorded artifact): a query
@@ -459,7 +442,7 @@ object Bench {
     }
     // persist the fingerprint+minima record for the NEXT changed-only
     // run: fresh entries win; queries skipped this run (or not selected
-    // by BENCH_ONLY) keep their prior record
+    // by SPARK_GRAFT_ONLY) keep their prior record
     val fpsOut: Map[String, Prior] = prior ++ results.flatMap { case (name, s) =>
       freshFps.get(name).map(f => name -> Prior(f, s.coldMin, s.warmMin))
     }
@@ -490,7 +473,7 @@ object Bench {
     // spec-pinned once — a leak shows up as round-over-round growth here
     val streamState = {
       import scala.jdk.CollectionConverters._
-      val m = SparkEntry.streamStateRows.asScala.toSeq.sortBy(_._1)
+      val m = graft.queries.Fixtures.streamStateRows.asScala.toSeq.sortBy(_._1)
       if (m.isEmpty) ""
       else m.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(",\"stream_state\":{", ",", "}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Single-machine scale probe: replicates the sf0.1 fixtures N× with
@@ -32,13 +32,8 @@ object ScaleProbe {
     onlyFilter = args.drop(1).headOption
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
 
     def replicate(df: DataFrame, idCol: String, times: Int): DataFrame = {
       val n = df.count()
@@ -145,7 +140,7 @@ object ScaleProbe {
           graft.index.Sq.searchRerank(sqDisk, emb, sqm, q,
             k = 10, shortlist = 200)) })
 
-      val dv = replicateVaried(factor).repartition(cpus.toInt).localCheckpoint()
+      val dv = replicateVaried(factor).repartition(cpus).localCheckpoint()
       val bmDir = java.nio.file.Files
         .createTempDirectory(s"probe_bmbatch_$factor").toString + "/postings"
       val bmTable = s"probe_bmbatch_$factor"
@@ -173,7 +168,7 @@ object ScaleProbe {
     if (onlyFilter.forall(_.exists("textdelta".contains))) {
       // spread the fixture (the varied crossJoin inherits the base
       // file's few partitions — a 1-task build would measure one core)
-      val dv = replicateVaried(factor).repartition(cpus.toInt).localCheckpoint()
+      val dv = replicateVaried(factor).repartition(cpus).localCheckpoint()
       val batch = spark.read.parquet(s"$sfDir/documents.parquet")
         .limit(500)
         .select((col("doc_id") + lit(9500000L)).as("doc_id"), col("text"))
@@ -1132,10 +1127,9 @@ object ScaleProbe {
     // plan must contain the bounded row_topk aggregate — a per-group
     // sort here is the shape that melts at 100 TB.
     {
-      org.apache.spark.sql.graft.TopKWindowRewrite.enable(spark)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val events = replicate(
-        graft.SparkEntry.fixEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
+        graft.queries.Fixtures.fixEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
           .select("user_id", "ts"), "user_id", factor)
       val counts = events.groupBy(
           date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),

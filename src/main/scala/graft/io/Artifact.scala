@@ -228,12 +228,7 @@ object Artifact {
                   n.matches(java.util.regex.Pattern.quote(stem) + "_v\\d+") ||
                     n == s"${stem}_deltas" || n == s"${stem}_tombstones"
                 }
-                .toSeq.foreach { p =>
-                  val walk = Files.walk(p)
-                  try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                    .forEach(f => Files.deleteIfExists(f))
-                  finally walk.close()
-                }
+                .toSeq.foreach(MutableStore.deleteDir)
             } finally s.close()
           }
           val extraJson = extras.map { case (k, v) => s""","$k":$v""" }.mkString

@@ -352,6 +352,9 @@ private[graft] object MutableStore {
       regexp_extract(input_file_name(), "/delta_([^/]+)/", 1))
       .otherwise(lit("base"))
 
+  /** Delete a file or directory tree, deepest entries first; a missing
+    * path is a no-op. Files.walk holds directory fds, so the walk is
+    * closed even when a delete throws. */
   def deleteDir(p: java.nio.file.Path): Unit = {
     if (!java.nio.file.Files.exists(p)) return
     val walk = java.nio.file.Files.walk(p)

@@ -236,7 +236,7 @@ object Sampling {
     * most `cap` rows per group in deterministic `order` order and drop
     * the rest. Deliberately written in the NAIVE window-rank form: under
     * [[org.apache.spark.sql.graft.TopKWindowRewrite]] (enabled by
-    * `SparkEntry.setupSession`) it plans as the bounded `row_topk`
+    * `GraftSession.local`) it plans as the bounded `row_topk`
     * aggregate — per-group state is `cap` rows and each map partition
     * contributes at most `cap` rows per group to the shuffle, which is
     * the shape that survives a 100 TB corpus with a million-doc host.

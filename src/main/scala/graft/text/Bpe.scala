@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   *    1-row NOT-EXISTS CTEs (pick k = the lowest-ranked candidate not
   *    conflicting with picks 1..k-1); a recursive-CTE formulation was
   *    rejected — DuckDB 1.0 silently mis-evaluates recursive CTEs
-  *    consumed under materialized upstreams (SparkEntry.bpeBatchRoundSql).
+  *    consumed under materialized upstreams (graft.queries.TokenizerOracleSql.bpeBatchRoundSql).
   *
   * The greedy application is a left fold seeded with the first symbol:
   * runs of a self-pair (`a a a a` under merge `(a,a)`) compress to
@@ -135,7 +135,7 @@ object Bpe {
 
   /** The batch-selection rule, driver-side (the oracle replays it as
     * chained 1-row NOT-EXISTS CTEs over the same ranked candidate
-    * list — see `SparkEntry.bpeBatchRoundSql`): scan
+    * list — see `graft.queries.TokenizerOracleSql.bpeBatchRoundSql`): scan
     * candidates in (count desc, a, b) order; keep one iff it shares NO
     * symbol — over {lhs, rhs, lhs+rhs} — with any ALREADY-KEPT
     * candidate, and its symbols are free of the reserved [[Sep]]

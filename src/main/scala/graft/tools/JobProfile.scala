@@ -1,26 +1,21 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Dev utility: run a declared query and print every Spark job it
-  * fires — start offset, duration, task count and call site — so a
+import graft.GraftSession
+import graft.queries.QueryRegistry
+
+/** Dev utility: for each named declared query, print its formatted
+  * physical plan, then run it and print every Spark job it fires —
+  * start offset, duration, task count and call site — so a
   * multi-action query's wall time decomposes into its component jobs.
-  * `sbt "runMain graft.tools.JobProfile <query> [sfDir] [runs]"`. */
+  * `sbt "runMain graft.tools.JobProfile <query[,query...]> [sfDir] [runs]"`. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val specs = QueryRegistry.all.select(Some(args(0)))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.setupSession(spark)
+    val spark = GraftSession.local()
 
     final case class J(id: Int, start: Long, site: String, nTasks: Int,
         var end: Long = 0L)
@@ -41,24 +36,29 @@ object JobProfile {
       }
     })
 
-    (1 to runs).foreach { r =>
-      jobs.clear()
-      val t0 = System.nanoTime()
-      val wall0 = System.currentTimeMillis()
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let listener events drain
-      import scala.jdk.CollectionConverters._
-      val js = jobs.values.asScala.toSeq.sortBy(_.start)
-      println(f"\n=== $name run $r: $secs%.2f s, ${js.size} jobs ===")
-      var covered = 0L
-      js.foreach { j =>
-        val dur = if (j.end > 0) j.end - j.start else -1L
-        covered += math.max(dur, 0L)
-        println(f"  +${j.start - wall0}%6dms ${dur}%6dms ${j.nTasks}%4dt  ${j.site}")
+    specs.foreach { spec =>
+      val name = spec.name
+      println(s"\n=== $name plan ===")
+      spec.build(spark, sfDir).explain("formatted")
+      (1 to runs).foreach { r =>
+        jobs.clear()
+        val t0 = System.nanoTime()
+        val wall0 = System.currentTimeMillis()
+        val df = spec.build(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(300) // let listener events drain
+        import scala.jdk.CollectionConverters._
+        val js = jobs.values.asScala.toSeq.sortBy(_.start)
+        println(f"\n=== $name run $r: $secs%.2f s, ${js.size} jobs ===")
+        var covered = 0L
+        js.foreach { j =>
+          val dur = if (j.end > 0) j.end - j.start else -1L
+          covered += math.max(dur, 0L)
+          println(f"  +${j.start - wall0}%6dms ${dur}%6dms ${j.nTasks}%4dt  ${j.site}")
+        }
+        println(f"  job-covered ${covered / 1000.0}%.2f s of $secs%.2f s wall")
       }
-      println(f"  job-covered ${covered / 1000.0}%.2f s of $secs%.2f s wall")
     }
     spark.stop()
   }

@@ -16,7 +16,7 @@ class BenchLineSpec extends AnyFunSuite {
   /** Every declared query at a worst-case (6-digit-seconds) timing —
     * the real name set, so the test tracks query-surface growth. */
   private def worstCase: Seq[(String, Double)] =
-    SparkEntry.queries.keys.toSeq.sorted.map(k => k -> 99999.999)
+    graft.queries.QueryRegistry.all.specs.map(_.name).sorted.map(k => k -> 99999.999)
 
   test("final stdout line survives tail -c 2000 + JSON parse with every declared query") {
     val summary = Bench.summaryLine(99999.999, 99999.999, worstCase, "/root/testdata/sf0.1", 3)
@@ -31,7 +31,7 @@ class BenchLineSpec extends AnyFunSuite {
     assert(node.get("metric").asText() == "total")
     assert(node.get("unit").asText() == "sec")
     assert(node.get("value").asDouble() > 0.0)
-    assert(node.get("n_queries").asInt() == SparkEntry.queries.size)
+    assert(node.get("n_queries").asInt() == graft.queries.QueryRegistry.all.specs.size)
   }
 
   test("per-query warm dict rides along whenever it fits the byte cap") {

@@ -108,7 +108,8 @@ class SnapshotPinSpec extends AnyFunSuite {
     // resolved location against a bare-normalized store path, so a
     // relative dir could never validate and every probe exhausted the
     // 8-attempt loop even with no concurrent commit
-    val rel = s"target/tmp_relpin_${System.nanoTime()}"
+    val stem = s"tmp_relpin_${System.nanoTime()}"
+    val rel = s"target/$stem"
     try {
       val docs = Seq((0L, "lychee fig"), (1L, "fig date")).toDF("doc_id", "text")
       InvertedIndex.ensure(spark, docs, "relpin_t", rel, buckets = 2)
@@ -121,10 +122,19 @@ class SnapshotPinSpec extends AnyFunSuite {
         s"relative-dir probe must pin and serve all fig docs, got $got")
     } finally {
       spark.sql("DROP TABLE IF EXISTS relpin_t")
-      Seq(rel, s"${rel}_deltas", s"${rel}_tombstones", s"${rel}__writer_lock")
+      Seq(rel, s"${rel}_deltas", s"${rel}_tombstones", s"${rel}__writer_lock",
+          s"$rel.graft_lock")
         .foreach(p => MutableStore.deleteDir(
           java.nio.file.Paths.get(p).toAbsolutePath))
     }
+    val left = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get("target"))
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(stem)).toList
+      } finally ls.close()
+    }
+    assert(left.isEmpty, s"relative-dir test left debris behind: $left")
   }
 
   test("posting store: never-reuse versioning skips past crashed-attempt sibling debris") {

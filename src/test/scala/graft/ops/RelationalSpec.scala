@@ -124,7 +124,7 @@ class RelationalSpec extends AnyFunSuite {
 
   test("topPartsPerBrand rides the row_topk rewrite (no Window in the plan)") {
     try {
-      graft.SparkEntry.setupSession(spark)
+      org.apache.spark.sql.graft.TopKWindowRewrite.enable(spark)
       val plan = Relational.topPartsPerBrand(
         spark.read.parquet(s"$sfDir/part.parquet"), k = 3)
         .queryExecution.executedPlan.toString

@@ -162,10 +162,10 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("events_top3_hourly plans the bounded row_topk aggregate, not a per-group sort") {
     try {
-      // the rewrite is session-level state owned by setupSession (the
-      // Bench/Verify mains call it once up front; query thunks must not)
-      graft.SparkEntry.setupSession(spark)
-      val plan = graft.SparkEntry.queries("events_top3_hourly")(spark, sfDir)
+      // the rewrite is session-level state owned by GraftSession (the
+      // mains enable it once up front; query thunks must not)
+      org.apache.spark.sql.graft.TopKWindowRewrite.enable(spark)
+      val plan = graft.queries.QueryRegistry.all("events_top3_hourly").build(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("row_topk"), s"TopKWindowRewrite did not fire:\n$plan")
       assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
@@ -177,8 +177,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("corpus_source_cap plans the bounded row_topk aggregate (per-domain cap at scale)") {
     try {
-      graft.SparkEntry.setupSession(spark)
-      val plan = graft.SparkEntry.queries("corpus_source_cap")(spark, sfDir)
+      org.apache.spark.sql.graft.TopKWindowRewrite.enable(spark)
+      val plan = graft.queries.QueryRegistry.all("corpus_source_cap").build(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("row_topk"), s"TopKWindowRewrite did not fire:\n$plan")
       assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
@@ -187,7 +187,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("events_json_filter parses each props blob exactly once (staged extraction)") {
-    val plan = graft.SparkEntry.queries("events_json_filter")(spark, sfDir)
+    val plan = graft.queries.QueryRegistry.all("events_json_filter").build(spark, sfDir)
       .queryExecution.executedPlan.toString
     val parses = "get_json_object".r.findAllIn(plan).length
     // one occurrence in the staging Project; a Filter+agg pair that each
@@ -246,7 +246,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("events_partitioned_prune reads one partition: the type filter is a PartitionFilter") {
-    val plan = graft.SparkEntry.queries("events_partitioned_prune")(spark, sfDir)
+    val plan = graft.queries.QueryRegistry.all("events_partitioned_prune").build(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
       s"event_type not pruned at the directory level:\n$plan")
@@ -612,7 +612,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val subsetExempt = Set("sql_substring_batch")
     for (name <- Seq("sql_bm25_topk", "sql_phrase_search", "sql_substring_search",
         "sql_bm25_batch", "sql_phrase_batch", "sql_substring_batch")) {
-      val plan = graft.SparkEntry.queries(name)(spark, sfDir)
+      val plan = graft.queries.QueryRegistry.all(name).build(spark, sfDir)
         .queryExecution.executedPlan.toString
       val ms = sel.findAllMatchIn(plan).toSeq
       assert(ms.nonEmpty, s"$name: no bucket pruning in plan:\n$plan")
@@ -626,7 +626,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("SQL surface: proximity self-join bucket-prunes; fuzzy lookup broadcasts, no cartesian") {
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
     for (name <- Seq("sql_proximity_search", "sql_proximity_batch")) {
-      val prox = graft.SparkEntry.queries(name)(spark, sfDir)
+      val prox = graft.queries.QueryRegistry.all(name).build(spark, sfDir)
         .queryExecution.executedPlan.toString
       val ms = sel.findAllMatchIn(prox).toSeq
       assert(ms.nonEmpty, s"$name: no bucket pruning in plan:\n$prox")
@@ -637,7 +637,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
     // the SQL batch IVF route must plan its cluster IN union as a
     // PARTITION filter on the layout scan (file-level pruning)
-    val ivfb = graft.SparkEntry.queries("sql_ivf_batch")(spark, sfDir)
+    val ivfb = graft.queries.QueryRegistry.all("sql_ivf_batch").build(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(ivfb.contains("PartitionFilters: [") && ivfb.contains("cluster"),
       s"sql_ivf_batch: cluster IN must be a partition filter:\n$ivfb")
@@ -645,7 +645,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
     // the SQL blocking path must be a broadcast equi-join on the
     // signature — never the oracle's all-pairs cross product
-    val fz = graft.SparkEntry.queries("sql_fuzzy_lookup")(spark, sfDir)
+    val fz = graft.queries.QueryRegistry.all("sql_fuzzy_lookup").build(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(fz.contains("BroadcastHashJoin"),
       s"sql_fuzzy_lookup: probe side must broadcast:\n$fz")
