@@ -356,7 +356,7 @@ object Bench {
       }
     }
 
-    // the driver leaves SPARK_GRAFT_ONLY unset and benches everything
+    // SPARK_GRAFT_ONLY unset benches every declared query
     val selected = graft.queries.QueryRegistry.selected.map(q => q.name -> q.build)
 
     // Seeded per-sweep order randomization: queries share one JVM and

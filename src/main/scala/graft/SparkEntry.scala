@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import graft.ops.VectorSearch
 import graft.queries.QueryRegistry
 
-/** Driver contract: the flagship `entry` query, and the declared
+/** Entry-point contract: the flagship `entry` query, and the declared
   * queries and their DuckDB oracles keyed by name. Both maps are views
   * of [[graft.queries.QueryRegistry]], where each query is declared
   * next to its oracle. Float policy: distances are computed in float64

@@ -2,7 +2,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.queries.QueryRegistry
-/** Driver-run correctness dump: each declared query's result → parquet,
+/** Correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {

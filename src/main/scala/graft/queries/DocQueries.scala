@@ -1210,7 +1210,7 @@ object DocQueries {
 
     // TAKEDOWN (GDPR / opt-out / contaminated-source) leg for the BM25
     // posting store — the reference treats delete as first-class (O5,
-    // /root/reference/src/vectordb.cpp:74-80); this extends it to the
+    // reference src/vectordb.cpp:74-80); this extends it to the
     // incremental text indexes. A delete batch is a tag-keyed
     // tombstone (batch-sized tokenize + two tiny writes — never an
     // index scan) recording the legs it covers; the delta-aware probe

@@ -11,7 +11,7 @@ object Fixtures {
   import OracleSql._
 
   /** Embedding dimensionality of the driver fixtures
-    * (embeddings.parquet under /root/testdata, FIXTURES.md §B1). */
+    * (embeddings.parquet, FIXTURES.md §B1). */
   val EmbDim = 64
 
   private[queries] def emb(s: SparkSession, dir: String): DataFrame =

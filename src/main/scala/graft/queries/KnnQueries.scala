@@ -1051,7 +1051,7 @@ object KnnQueries {
          |ORDER BY dist ASC, vec_id ASC LIMIT 10""".stripMargin),
 
     // HNSW — the index family the reference actually ships
-    // (/root/reference/lib/hnsw/hnsw.h, Malkov & Yashunin TPAMI'18),
+    // (reference lib/hnsw/hnsw.h, Malkov & Yashunin TPAMI'18),
     // sharded: one deterministic sub-graph per hash shard, built once
     // behind the fingerprint sidecar, probed by searching every
     // shard's graph in parallel and merging <= parts*k candidates in a
